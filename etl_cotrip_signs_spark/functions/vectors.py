@@ -8,6 +8,8 @@ comparisons are bit-stable after rounding.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, functions as F
 
 
@@ -23,7 +25,7 @@ def lit_long_array(vals) -> Column:
     measured ~3 s of pure driver time in join_bloom_pruned, r11); parsing
     one array literal string is milliseconds and yields the same
     expression tree. Guide §5: the driver should do almost no work."""
-    return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
+    return F.expr("array(" + ",".join(f"{int(v)}L" for v in _finite(vals)) + ")")
 
 
 def lit_double_array(vals) -> Column:
@@ -33,7 +35,17 @@ def lit_double_array(vals) -> Column:
     Double.parseDouble is correctly rounded, so the parsed doubles are
     bit-identical to the Python values (verified for exponent and
     negative-zero forms)."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
+    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in _finite(vals)) + ")")
+
+
+def _finite(vals) -> list:
+    """``vals`` as a list, refusing empty input and NaN/±inf: they would
+    parse to an untyped ``array()`` or to ``nanD``/``infD`` column
+    references instead of failing."""
+    vals = list(vals)
+    if not vals or not all(math.isfinite(v) for v in vals):
+        raise ValueError(f"literal array needs finite elements, got {vals[:8]!r}")
+    return vals
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.money import sql_sum_fixed, sum_fixed
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 from .training import _md5_bucket
 
 
@@ -1125,15 +1126,13 @@ def trend_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = daily.select(F.col("d").alias("da"), F.col("c").alias("ca"))
     b = daily.select(F.col("d").alias("db"), F.col("c").alias("cb"))
-    pairs = (
-        a.join(F.broadcast(b), F.col("da") < F.col("db"))
-        .select(
+    pairs, sig = materialize(  # the sort consumes it; the count rides along
+        a.join(F.broadcast(b), F.col("da") < F.col("db")).select(
             (F.col("cb") - F.col("ca")).alias("num"),
             (F.col("db") - F.col("da")).alias("den"),
         )
-        .localCheckpoint(eager=True)  # count + sort both consume it
     )
-    n = pairs.count()
+    n = sig["rows"]
     k = (n + 1) // 2
     med = (
         pairs.orderBy(

@@ -29,6 +29,7 @@ from ..functions.shingles import shingles_from_tokens, tokens, with_shingles
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 
 # MinHash parameters: 32 permutations = 8 bands × 4 rows. With Jaccard
 # threshold t, collision prob in ≥1 band is 1-(1-t^4)^8 (s-curve at ~0.5).
@@ -172,7 +173,11 @@ def minhash_signatures(docs: DataFrame, k: int = _MINHASH_K) -> DataFrame:
     all — the hashed array is materialized once per row because Catalyst
     refuses to collapse a projection referenced k times.
     """
-    hs_df = hashed_shingles(docs)
+    return _signatures(hashed_shingles(docs), k)
+
+
+def _signatures(hs_df: DataFrame, k: int = _MINHASH_K) -> DataFrame:
+    """The minhash_signatures projection over a (doc_id, hs) frame."""
     return hs_df.select(
         "doc_id",
         *[
@@ -205,16 +210,8 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     tests/test_materialization.py pins both the mechanism and a repo-wide
     no-lazy-checkpoint lint.
     """
-    hs = hashed_shingles(docs).localCheckpoint(eager=True)
-    sig = hs.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(F.col("hs"), _mh_perm(i))
-            ).alias(f"mh_{i}")
-            for i in range(_MINHASH_K)
-        ],
-    )
+    hs, hs_sig = materialize(hashed_shingles(docs))
+    sig = _signatures(hs)
     # r10 tried checkpointing `bands` bare and REVERTED it: the
     # materialized table loses the inline plan's statistics and the band
     # self-join degraded broadcast -> shuffle (1.31 -> 2.99 normalized on
@@ -242,7 +239,7 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
             )
         ).alias("band_id", "band_hash"),
     ).localCheckpoint(eager=True)
-    n_docs = hs.count()  # cached-metadata read: hs is checkpointed above
+    n_docs = hs_sig["rows"]
     left = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
     right = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
     pairs = (
@@ -1055,11 +1052,10 @@ def dedup_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    sh = (
+    sh, sh_sig = materialize(
         hashed_shingles(docs)
         .join(docs.select("doc_id", "lang"), "doc_id")
         .select("doc_id", "lang", "hs")
-        .localCheckpoint(eager=True)
     )
     sizes = sh.select("doc_id", F.size("hs").alias("sz"))
     posts = sh.select("doc_id", "lang", F.explode("hs").alias("s"))
@@ -1073,7 +1069,7 @@ def dedup_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    n_docs = sh.count()  # cached-metadata read: sh is localCheckpointed
+    n_docs = sh_sig["rows"]
     with_sizes = (
         inter.join(
             _maybe_broadcast(
@@ -1166,9 +1162,11 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify switches to the posting-join count (the dedup_ngram_jaccard
     shape) — both paths pinned identical in tests/test_wave40.py; the
     candidate stages are unchanged."""
-    d = with_shingles(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", "shingles").localCheckpoint(eager=True)
+    d, d_sig = materialize(
+        with_shingles(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        ).select("doc_id", "shingles")
+    )
     sh = d.select("doc_id", F.size("shingles").alias("nt"),
                   F.explode("shingles").alias("s"))
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -1208,7 +1206,7 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    n_docs = d.count()  # cached-metadata read: d is localCheckpointed above
+    n_docs = d_sig["rows"]
     if n_docs <= _VERIFY_BROADCAST_CAP_ARRAYS:
         arr_a = d.select(
             F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
@@ -1365,18 +1363,10 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     hs_df = hashed_shingles(d).localCheckpoint(eager=True)
-    # signatures straight over the checkpointed hashed-shingle array (the
-    # minhash_signatures body, minus its own hashed_shingles re-derivation
-    # — hs_df has two consumers here: signatures and the verify join)
-    sig = hs_df.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(F.col("hs"), _mh_perm(i))
-            ).alias(f"mh_{i}")
-            for i in range(_MINHASH_K)
-        ],
-    ).localCheckpoint(eager=True)
+    # signatures straight over the checkpointed hashed-shingle array (no
+    # second hashed_shingles derivation — hs_df has two consumers here:
+    # signatures and the verify join)
+    sig, sig_counts = materialize(_signatures(hs_df))
     # Candidate nesting: agreeing on an r=4 band implies agreeing on both
     # of its r=2 sub-bands and all four r=1 coordinates, so b4r4's
     # candidates ⊆ b8r2's ⊆ b16r1's. Generate ONE candidate set (the
@@ -1429,9 +1419,8 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         hits[f"b{b_cnt}r{r}"] = band_hit
     # Size-gated hints (ADVICE r7 item 1): hs_df (shingle-hash arrays) is
     # O(corpus); broadcast only while the measured doc count is bounded,
-    # else hint-free (AQE plans the exchange on the doc key). The count is
-    # a cached-metadata read — sig was localCheckpointed above.
-    n_docs = sig.count()
+    # else hint-free (AQE plans the exchange on the doc key).
+    n_docs = sig_counts["rows"]
     scored = (
         pair_mask.join(
             _maybe_broadcast(

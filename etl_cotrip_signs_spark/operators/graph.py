@@ -18,8 +18,8 @@ small-star dance in both clarity and constant factors. Lineage is cut with
 At 100 TB: the label table is (node, label) — two longs per document —
 and the edge table is only the near-dup pairs (orders of magnitude smaller
 than the corpus). Both shuffle on node id, an unskewed high-cardinality
-key. The convergence count() per round is a cheap job over the label
-table; with a known diameter bound the check can be run every k rounds.
+key. The per-round changed count is a signal of the round's own
+checkpoint job (``session.materialize``), so it adds no job.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import fixpoint, materialize
 from .dedup import NGRAM_PAIRS_ORACLE, dedup_ngram_jaccard
 
 
@@ -65,25 +66,23 @@ def connected_components(
         labels_init = labels_init.repartition(num_partitions, "node")
     sym = sym.distinct().localCheckpoint(eager=True)
     labels = labels_init.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+
+    def propagate(labels):
         # One aggregate per round (r11, guide §2.4): min over {own label} ∪
         # {s-neighbors' labels} — algebraically identical to the old
         # two-join form (join + groupBy-min + left-join + least), but each
         # round is a single union + groupBy instead of two joins, dropping
         # one join and one exchange per round. The self row is tagged so the
         # SAME aggregate carries the previous label out (exactly one own=1
-        # row per node), making the convergence check a cheap filter-count
-        # over the checkpointed output with no join back to the old labels.
-        # Edge endpoints must be ⊆ nodes (all callers build the node list
-        # from the edge list or a superset); the old left-join form silently
-        # dropped unknown endpoints, the union form would add them.
+        # row per node), so the changed count is a signal of the round's
+        # own checkpoint job, with no join back to the old labels.
         self_rows = labels.select(
             "node", "component", F.lit(1).alias("own")
         )
         propagated = sym.join(labels, sym.s == labels.node).select(
             F.col("d").alias("node"), F.col("component"), F.lit(0).alias("own")
         )
-        proposed = (
+        proposed, sig = materialize(
             propagated.unionAll(self_rows)
             .groupBy("node")
             .agg(
@@ -91,18 +90,20 @@ def connected_components(
                 F.max(
                     F.when(F.col("own") == 1, F.col("component"))
                 ).alias("prev_component"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            changed=F.count_if(F.col("component") != F.col("prev_component")),
+            unknown=F.count_if(F.col("prev_component").isNull()),
         )
-        changed = proposed.filter(
-            F.col("component") != F.col("prev_component")
-        ).count()
-        labels = proposed.select("node", "component")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
-    )
+        # Edge endpoints must be ⊆ nodes: a node with no own row is an
+        # endpoint the caller left out, which the union would silently add.
+        if sig["unknown"]:
+            raise ValueError(
+                f"connected_components: {sig['unknown']} edge endpoints are "
+                "missing from nodes"
+            )
+        return proposed.select("node", "component"), sig["changed"] == 0
+
+    return fixpoint(propagate, labels, max_iter, "connected_components")
 
 
 @query(
@@ -137,10 +138,8 @@ def dedup_components_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint the pair list ITSELF: sym(edges) and the label init both
     # descend from it, and without this the expensive jaccard join runs
     # once per lineage (measured ~2x the whole query's cost).
-    pairs = (
-        dedup_ngram_jaccard(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+    pairs, sig = materialize(
+        dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     )
     # Iterate ONLY over nodes that have an edge: per-round shuffle size is
     # O(near-dup docs), not O(corpus). Singletons (the overwhelming
@@ -152,16 +151,14 @@ def dedup_components_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Size the CC rounds to the edge table (tiny vs the corpus): one
     # partition per ~500k pairs, so each round is a handful of real tasks
-    # instead of 32 near-empty ones. The count is free — pairs is already
-    # checkpoint-materialized by this action or the first round.
-    n_pairs = pairs.count()
+    # instead of 32 near-empty ones.
     labels = connected_components(
         edge_nodes,
         pairs,
         node_col="doc_id",
         src_col="doc_a",
         dst_col="doc_b",
-        num_partitions=max(1, n_pairs // 500_000),
+        num_partitions=max(1, sig["rows"] // 500_000),
     )
     return docs.join(labels, docs.doc_id == labels.node, "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("component")
@@ -455,13 +452,12 @@ def pagerank_ranks(
         .union(p.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes, sig = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_nodes = nodes.count()
+    n_nodes = sig["rows"]
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     for _ in range(n_iter):
@@ -501,30 +497,33 @@ def kcore_nodes(
     stays O(1) deep instead of O(rounds). Rounds are bounded by the
     peeling depth (tiny in practice: most nodes fall in round one).
     """
-    sym = (
+    sym, sig = materialize(
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
         .union(edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    core = _kcore_peel_sym(sym, k)
+    core = _kcore_peel_sym(sym, sig["rows"], k)
     return core.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("s").alias("node"), F.col("deg").alias("core_degree")
     )
 
 
-def _kcore_peel_sym(sym: DataFrame, k: int) -> DataFrame:
-    """Peel an already-symmetric, already-checkpointed edge list to its
-    k-core fixpoint; returns the surviving symmetric edge list. Split out
-    (r10) so ladder callers can exploit core NESTING: the k-core is a
-    subgraph of every j-core with j < k, so peeling for k inside the
-    (k-2)-core reaches the identical fixpoint without re-shedding the
-    low-degree mass the previous rung already removed."""
-    while True:
+def _kcore_peel_sym(sym: DataFrame, rows: int, k: int) -> DataFrame:
+    """Peel an already-symmetric, already-checkpointed edge list of
+    ``rows`` rows to its k-core fixpoint; returns the surviving symmetric
+    edge list. Split out (r10) so ladder callers can exploit core NESTING:
+    the k-core is a subgraph of every j-core with j < k, so peeling for k
+    inside the (k-2)-core reaches the identical fixpoint without
+    re-shedding the low-degree mass the previous rung already removed.
+
+    Every round but the last drops the edges of at least one weak node,
+    so ``rows + 1`` rounds bound the loop."""
+
+    def peel(sym):
         deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        weak = deg.filter(F.col("deg") < k).select("s").localCheckpoint(eager=True)
-        if weak.isEmpty():
-            return sym
+        weak, sig = materialize(deg.filter(F.col("deg") < k).select("s"))
+        if sig["rows"] == 0:
+            return sym, True
         sym = (
             sym.join(F.broadcast(weak), ["s"], "left_anti")
             .join(
@@ -532,6 +531,9 @@ def _kcore_peel_sym(sym: DataFrame, k: int) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+        return sym, False
+
+    return fixpoint(peel, sym, rows + 1, f"{k}-core peeling")
 
 
 @query(
@@ -636,28 +638,29 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (k+2)-core of G equals the (k+2)-core of G's k-core, because cores
     # are the maximal min-degree subgraphs and nest by definition). The
     # old ladder re-shed the same low-degree mass at every k.
-    sym = (
+    sym, sig = materialize(
         pairs.select(F.col("name_a").alias("s"), F.col("name_b").alias("d"))
         .union(
             pairs.select(F.col("name_b").alias("s"), F.col("name_a").alias("d"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    rows = sig["rows"]
     out: list[tuple[int, int, int]] = []
     k = 2
     while True:
-        sym = _kcore_peel_sym(sym, k)
+        sym = _kcore_peel_sym(sym, rows, k)
         stats = (
             sym.groupBy("s")
             .agg(F.count(F.lit(1)).alias("core_degree"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.max("core_degree"), F.lit(0)).alias("max_deg"),
+                F.coalesce(F.sum("core_degree"), F.lit(0)).alias("rows"),
             )
             .first()
         )
-        n = int(stats["n"])
+        n, rows = int(stats["n"]), int(stats["rows"])
         out.append((k, n, int(stats["max_deg"])))
         if n == 0 or k > 256:  # max-degree bound; 256 = runaway guard
             break
@@ -1112,24 +1115,31 @@ def hashmin_jump_components(
     """Hash-to-min + pointer-jumping CC loop over (node) / (name_a, name_b)
     frames; returns (node, lbl). Labels are node values, fixpoint = the
     component's min node — unique, so results are round-count-independent.
-    Each round is eagerly checkpointed; the per-round driver action is a
-    metadata-scale changed-count. Shared by graph_components_hashmin_jump
-    and the Borůvka MSF contraction step."""
+    Each round is one eager checkpoint whose job also counts the changed
+    labels. Shared by graph_components_hashmin_jump and the Borůvka MSF
+    contraction step."""
     sym = pairs.select(
         F.col("name_a").alias("s"), F.col("name_b").alias("d")
     ).union(pairs.select(F.col("name_b").alias("s"), F.col("name_a").alias("d")))
     lbl = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint(
         eager=True
     )
-    for _round in range(max_rounds):
+
+    def hook_and_jump(lbl):
         nbr = sym.join(lbl, sym.s == lbl.node).select(
-            F.col("d").alias("node"), F.col("lbl")
+            F.col("d").alias("node"), F.col("lbl"), F.lit(0).alias("own")
         )
+        # The tagged self row carries the node's previous label through the
+        # same aggregate (the connected_components shape), so the changed
+        # count needs no join back to the old labels.
         cand = (
-            lbl.select("node", "lbl")
+            lbl.select("node", "lbl", F.lit(1).alias("own"))
             .union(nbr)
             .groupBy("node")
-            .agg(F.min("lbl").alias("lbl1"))
+            .agg(
+                F.min("lbl").alias("lbl1"),
+                F.max(F.when(F.col("own") == 1, F.col("lbl"))).alias("prev"),
+            )
         )
         # Pointer jump: follow the label's own label. Labels are always
         # node values (min over a set of nodes), so the lookup join always
@@ -1137,25 +1147,15 @@ def hashmin_jump_components(
         jump = cand.select(
             F.col("node").alias("lbl1"), F.col("lbl1").alias("lbl2")
         )
-        new_lbl = (
-            cand.join(jump, "lbl1", "left")
-            .select("node", F.coalesce("lbl2", "lbl1").alias("lbl"))
-            .localCheckpoint(eager=True)
+        new_lbl, sig = materialize(
+            cand.join(jump, "lbl1", "left").select(
+                "node", F.coalesce("lbl2", "lbl1").alias("lbl"), "prev"
+            ),
+            changed=F.count_if(F.col("lbl") != F.col("prev")),
         )
-        changed = (
-            new_lbl.alias("n")
-            .join(lbl.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        lbl = new_lbl
-        if changed == 0:
-            break
-    else:  # pragma: no cover - stall guard, same policy as hierarchy op
-        raise RuntimeError(
-            "hash-to-min CC failed to converge — label graph is not shrinking"
-        )
-    return lbl
+        return new_lbl.select("node", "lbl"), sig["changed"] == 0
+
+    return fixpoint(hook_and_jump, lbl, max_rounds, "hash-to-min CC")
 
 
 @query(
@@ -1191,8 +1191,8 @@ def graph_components_hashmin_jump(spark: SparkSession, sf_dir: str) -> DataFrame
     hash-to-min + jumping converges in ~log2(n). The fixpoint (component
     = min name) is unique, so the result is independent of the round
     count and both engines agree regardless of convergence path. Rounds
-    iterate over the edge-incident label table only (eagerly checkpointed
-    per round, metadata-scale driver check per round)."""
+    iterate over the edge-incident label table only (one eager checkpoint
+    per round, whose job also counts the changed labels)."""
     from .text import fuzzy_join_del1
 
     names = (
@@ -1306,17 +1306,16 @@ def graph_minimum_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame
     comp = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint(
         eager=True
     )
-    for _outer in range(20):
+
+    def boruvka_round(state):
+        comp, mst = state
         cu = comp.select(F.col("node").alias("u"), F.col("lbl").alias("cu"))
         cv = comp.select(F.col("node").alias("v"), F.col("lbl").alias("cv"))
-        live = (
-            edges.join(cu, "u")
-            .join(cv, "v")
-            .filter(F.col("cu") != F.col("cv"))
-            .localCheckpoint(eager=True)
+        live, sig = materialize(
+            edges.join(cu, "u").join(cv, "v").filter(F.col("cu") != F.col("cv"))
         )
-        if live.count() == 0:
-            break
+        if sig["rows"] == 0:
+            return state, True
         # Min outgoing edge per component under (w, u, v); the endpoint
         # labels ride along so contraction can run on the COMPONENT graph
         # (size = #components, at least halving per round) instead of
@@ -1353,8 +1352,9 @@ def graph_minimum_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("node", F.col("new_lbl").alias("lbl"))
             .localCheckpoint(eager=True)
         )
-    else:  # pragma: no cover - stall guard
-        raise RuntimeError("Borůvka failed to converge in 20 rounds")
+        return (comp, mst), False
+
+    _, mst = fixpoint(boruvka_round, (comp, mst), 20, "Borůvka MSF")
     return mst.select(
         F.col("u").alias("id_a"),
         F.col("v").alias("id_b"),
@@ -1428,8 +1428,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each round is one edges-join-frontier shuffle + a
     combinable min — the textbook Pregel iteration expressed as
     DataFrames; rounds are bounded by the weighted hop diameter, and
-    every round is eagerly checkpointed with a metadata-scale change
-    count. At 100 TB the same loop runs with the frontier-only
+    every round is one eager checkpoint whose job also yields the
+    convergence signal. At 100 TB the same loop runs with the frontier-only
     optimization (relax only nodes whose distance changed last round);
     here the full-relax keeps the code identical to the oracle's stages."""
     edges = _msf_weighted_edges(spark, sf_dir).localCheckpoint(eager=True)
@@ -1441,41 +1441,32 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
+
     # Convergence detector (r10): distances are monotone — a node's dist
     # never increases (min over a union that includes the old value) and
     # nodes are only ever added — so the table is unchanged iff its
     # (row count, total dist) pair is unchanged: any strict relaxation
-    # lowers the sum, any newly reached node raises the count. Tracking
-    # that pair costs ONE combinable aggregate over the just-checkpointed
-    # table per round, replacing the old per-round self-JOIN change count
-    # (two shuffles + a join per round, ~25 rounds at sf0.01 — the
-    # dominant fixed overhead of the loop, guide §1.2 step 1).
-    sig_prev = None
-    for _round in range(128):
+    # lowers the sum, any newly reached node raises the count. The pair is
+    # observed on each round's checkpoint job, so detecting the fixpoint
+    # costs no join and no extra job.
+    def relax_all(state):
+        dist, sig_prev = state
         relax = dist.join(sym, dist.node == sym.s).select(
             F.col("d").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        new_dist = (
+        new_dist, sig = materialize(
             dist.select("node", "dist")
             .union(relax)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        sig_row = new_dist.agg(
-            F.count(F.lit(1)).alias("n"),
+            .agg(F.min("dist").alias("dist")),
             # decimal(38,0) so the monotone-sum detector can never wrap at
             # scale (a wrap that lands exactly on the previous sum would
             # false-converge)
-            F.sum(F.col("dist").cast("decimal(38,0)")).alias("total"),
-        ).first()
-        sig = (sig_row["n"], sig_row["total"])
-        dist = new_dist
-        if sig == sig_prev:
-            break
-        sig_prev = sig
-    else:  # pragma: no cover - stall guard
-        raise RuntimeError("Bellman-Ford failed to converge in 128 rounds")
+            total=F.sum(F.col("dist").cast("decimal(38,0)")),
+        )
+        return (new_dist, sig), sig == sig_prev
+
+    dist, _ = fixpoint(relax_all, (dist, None), 128, "Bellman-Ford")
     return dist.select(F.col("node").alias("id"), F.col("dist").cast("long").alias("dist_d2"))
 
 
@@ -1500,8 +1491,9 @@ def graph_sssp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist
-    for _round in range(128):
+
+    def relax_frontier(state):
+        dist, frontier = state
         relax = frontier.join(sym, frontier.node == sym.s).select(
             F.col("d").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
@@ -1522,15 +1514,14 @@ def graph_sssp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        new_frontier = merged.filter(
-            F.col("improved") & F.col("dist").isNotNull()
-        ).select("node", "dist").localCheckpoint(eager=True)
-        dist = merged.select("node", "dist")
-        if new_frontier.count() == 0:
-            break
-        frontier = new_frontier
-    else:  # pragma: no cover - stall guard
-        raise RuntimeError("frontier Bellman-Ford failed to converge")
+        new_frontier, sig = materialize(
+            merged.filter(F.col("improved") & F.col("dist").isNotNull()).select(
+                "node", "dist"
+            )
+        )
+        return (merged.select("node", "dist"), new_frontier), sig["rows"] == 0
+
+    dist, _ = fixpoint(relax_frontier, (dist, dist), 128, "frontier Bellman-Ford")
     return dist.select(
         F.col("node").alias("id"),
         F.col("dist").cast("long").alias("dist_d2"),
@@ -1796,14 +1787,16 @@ def graph_random_walk_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sym = _msf_sym_edges(spark, sf_dir)
     pts = _msf_points(spark, sf_dir)
-    adj = sym.select(
-        "u",
-        "v",
-        (
-            F.row_number().over(Window.partitionBy("u").orderBy("v")) - 1
-        ).alias("idx"),
-        F.count(F.lit(1)).over(Window.partitionBy("u")).alias("deg"),
-    ).localCheckpoint(eager=True)  # every step joins it
+    adj, adj_sig = materialize(  # every step joins it
+        sym.select(
+            "u",
+            "v",
+            (
+                F.row_number().over(Window.partitionBy("u").orderBy("v")) - 1
+            ).alias("idx"),
+            F.count(F.lit(1)).over(Window.partitionBy("u")).alias("deg"),
+        )
+    )
     # r10 NOTE (tried and reverted, kept for the record): resolving deg via
     # a per-node lookup first and equi-joining the adjacency on (u, idx) —
     # so each step emits one row per walker instead of deg rows — measured
@@ -1832,9 +1825,8 @@ def graph_random_walk_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins of BOTH sides. Under the measured row cap (fixed-width 4-long
     # rows; 2M rows ≈ 64 MB broadcast) ship the adjacency once per executor
     # and never shuffle the walker state; above it (the 100 TB regime) the
-    # hint is withheld and AQE plans the exchanges as before. The count is
-    # a cached-metadata read — adj is checkpointed above.
-    adj_bcast = adj.count() <= 2_000_000
+    # hint is withheld and AQE plans the exchanges as before.
+    adj_bcast = adj_sig["rows"] <= 2_000_000
     state = pts.select(F.col("id").alias("walker"), F.col("id").alias("cur"))
     for t in range(1, _WALK_STEPS + 1):
         a = adj.select(
@@ -2128,13 +2120,14 @@ def graph_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import similarity_threshold_pairs
 
-    edges = (
-        similarity_threshold_pairs(spark, sf_dir)
-        .select(F.col("vec_a").alias("s"), F.col("vec_b").alias("d"))
-        .localCheckpoint(eager=True)
+    edges, sig = materialize(
+        similarity_threshold_pairs(spark, sf_dir).select(
+            F.col("vec_a").alias("s"), F.col("vec_b").alias("d")
+        )
     )
-    n_prev = edges.count()
-    for rounds in range(1, 65):  # runaway guard only; fixpoint is the exit
+
+    def peel(state):
+        edges, n_prev = state
         e1 = edges.select(F.col("s").alias("x"), F.col("d").alias("y"))
         e2 = edges.select(F.col("s").alias("y"), F.col("d").alias("z"))
         e3 = edges.select(F.col("s").alias("x"), F.col("d").alias("z"))
@@ -2148,20 +2141,15 @@ def graph_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("s", "d")
             .agg(F.count(F.lit(1)).alias("sup"))
         )
-        edges = (
+        edges, sig = materialize(
             edges.join(sup, ["s", "d"])
             .filter(F.col("sup") >= _TRUSS_K - 2)
             .select("s", "d")
-            .localCheckpoint(eager=True)
         )
-        n_cur = edges.count()
-        if n_cur == n_prev or n_cur == 0:
-            break
-        n_prev = n_cur
-    else:
-        raise AssertionError(
-            "k-truss runaway: no fixpoint within 64 peel rounds"
-        )
+        return (edges, sig["rows"]), sig["rows"] in (n_prev, 0)
+
+    # 64 rounds: a runaway guard only; the fixpoint is the exit
+    edges, _ = fixpoint(peel, (edges, sig["rows"]), 64, "k-truss peel")
     e1 = edges.select(F.col("s").alias("x"), F.col("d").alias("y"))
     e2 = edges.select(F.col("s").alias("y"), F.col("d").alias("z"))
     e3 = edges.select(F.col("s").alias("x"), F.col("d").alias("z"))
@@ -2277,29 +2265,23 @@ def graph_densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     stats: list[tuple[int, int, int, int]] = []
-    converged = False
-    for r in range(64):  # runaway guard only; empty set is the exit
-        deg = (
+
+    def peel(edges):
+        # Both loop scalars come from the degree table's checkpoint job:
+        # every edge contributes exactly two degree units, so
+        # ne == sum(deg) / 2 and no separate edge count is needed.
+        deg, sig = materialize(
             edges.select(F.col("s").alias("v"))
             .unionAll(edges.select(F.col("d").alias("v")))
             .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("deg")),
+            sum_deg=F.sum("deg"),
         )
-        # One aggregate job yields BOTH loop scalars (r10): every edge
-        # contributes exactly two degree units, so ne == sum(deg) / 2 — the
-        # separate edges.count() job per round (plus the deg.count() job)
-        # collapses into a single combinable pass over the checkpointed
-        # degree table. Same integers, one job fewer per round.
-        sig = deg.agg(
-            F.count(F.lit(1)).alias("nv"), F.sum("deg").alias("sum_deg")
-        ).first()
-        nv = int(sig["nv"])
-        ne = int(sig["sum_deg"]) // 2 if sig["sum_deg"] is not None else 0
+        nv = sig["rows"]
+        ne = sig["sum_deg"] // 2 if sig["sum_deg"] is not None else 0
         if nv == 0:
-            converged = True
-            break
-        stats.append((r, nv, ne, ne * 1_000_000 // nv))
+            return edges, True
+        stats.append((len(stats), nv, ne, ne * 1_000_000 // nv))
         keep = deg.filter(F.col("deg") * nv > 3 * ne).select("v")
         edges = (
             edges.join(keep.select(F.col("v").alias("s")), "s")
@@ -2307,11 +2289,13 @@ def graph_densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("s", "d")
             .localCheckpoint(eager=True)
         )
-    else:  # pragma: no cover
-        raise AssertionError("densest-subgraph runaway: 64 rounds")
+        return edges, False
+
+    # 64 rounds: a runaway guard only; the empty set is the exit
+    fixpoint(peel, edges, 64, "densest-subgraph peel")
     best = max(stats, key=lambda t: (t[3], -t[0]))
     return spark.createDataFrame(
-        [(best[0], best[1], best[2], best[3], len(stats), converged)],
+        [(best[0], best[1], best[2], best[3], len(stats), True)],
         "best_round int, n_vertices long, n_edges long, density_ppm long, "
         "rounds_total long, converged boolean",
     )
@@ -2380,12 +2364,12 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = graph_lpa_communities(spark, sf_dir).select(
         F.col("name").alias("node"), F.col("community").alias("label")
     ).localCheckpoint(eager=True)  # two label joins + community rollups
-    edges = (
-        fuzzy_join_del1(spark, sf_dir)
-        .select(F.col("name_a").alias("s"), F.col("name_b").alias("d"))
-        .localCheckpoint(eager=True)
+    edges, sig = materialize(
+        fuzzy_join_del1(spark, sf_dir).select(
+            F.col("name_a").alias("s"), F.col("name_b").alias("d")
+        )
     )
-    m = edges.count()
+    m = sig["rows"]
     ec = (
         edges.join(labels.select(F.col("node").alias("s"), F.col("label").alias("la")), "s")
         .join(labels.select(F.col("node").alias("d"), F.col("label").alias("lb")), "d")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..io import load_table
 from ..registry import query
+from ..session import fixpoint, materialize
 
 
 @query(
@@ -58,11 +59,11 @@ def hierarchy_closure_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence, so converged rows pass through unchanged.
 
     Each round is ONE shuffle join of the n-row state with itself —
-    log2(max_depth) rounds total (convergence-checked with a count
-    action, cluster-metadata cost). The naive parent-chase is
-    max_depth shuffles. Eager localCheckpoint per round: the next
-    round's join reads the state TWICE (both sides), the round-3 lesson
-    on lazy fan-out recomputation.
+    log2(max_depth) rounds total; the unresolved-row count that tests
+    convergence is a signal of the round's own checkpoint job. The naive
+    parent-chase is max_depth shuffles. Eager localCheckpoint per round:
+    the next round's join reads the state TWICE (both sides), the round-3
+    lesson on lazy fan-out recomputation.
     """
     part = load_table(spark, sf_dir, "part").select("p_partkey")
     edges = part.select(
@@ -72,29 +73,19 @@ def hierarchy_closure_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("parent"),
     )
-    state = edges.select(
-        "v",
-        F.col("parent").alias("anc"),
-        F.when(F.col("v") > 0, F.col("parent")).otherwise(0).cast("long").alias("s"),
-        F.when(F.col("v") > 0, 1).otherwise(0).cast("long").alias("d"),
-    ).localCheckpoint(eager=True)
+    unresolved = F.count_if(F.col("anc") != 0)
+    state, sig = materialize(
+        edges.select(
+            "v",
+            F.col("parent").alias("anc"),
+            F.when(F.col("v") > 0, F.col("parent")).otherwise(0).cast("long").alias("s"),
+            F.when(F.col("v") > 0, 1).otherwise(0).cast("long").alias("d"),
+        ),
+        remaining=unresolved,
+    )
 
-    prev_remaining = None
-    while True:
-        remaining = state.filter(F.col("anc") != 0).count()
-        if remaining == 0:
-            break
-        # Progress guard (review finding): on a key space NOT closed under
-        # the parent function, a row's anc can reference a missing key and
-        # never resolve — the LEFT join passes it through unchanged every
-        # round and the loop would spin forever. No progress => fail loudly.
-        if remaining == prev_remaining:
-            raise ValueError(
-                f"hierarchy closure stalled: {remaining} nodes reference "
-                "ancestors absent from the node set (key space not closed "
-                "under the parent function)"
-            )
-        prev_remaining = remaining
+    def double(st):
+        state, remaining = st
         jump = state.select(
             F.col("v").alias("j_v"),
             F.col("anc").alias("j_anc"),
@@ -106,16 +97,31 @@ def hierarchy_closure_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
         # inner join only works when the root row itself is in the data
         # (review finding: on a 1-based key space the converged rows
         # would silently drop and empty the state).
-        state = (
-            state.join(jump, state["anc"] == jump["j_v"], "left")
-            .select(
+        state, sig = materialize(
+            state.join(jump, state["anc"] == jump["j_v"], "left").select(
                 "v",
                 F.coalesce("j_anc", "anc").alias("anc"),
                 (F.col("s") + F.coalesce("j_s", F.lit(0))).alias("s"),
                 (F.col("d") + F.coalesce("j_d", F.lit(0))).alias("d"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            remaining=unresolved,
         )
+        # Progress guard (review finding): on a key space NOT closed under
+        # the parent function, a row's anc can reference a missing key and
+        # never resolve — the LEFT join passes it through unchanged every
+        # round and the loop would spin forever. No progress => fail loudly.
+        if 0 < sig["remaining"] == remaining:
+            raise ValueError(
+                f"hierarchy closure stalled: {remaining} nodes reference "
+                "ancestors absent from the node set (key space not closed "
+                "under the parent function)"
+            )
+        return (state, sig["remaining"]), sig["remaining"] == 0
+
+    # The guard makes `remaining` fall every round, so it bounds the rounds.
+    n = sig["remaining"]
+    if n:
+        state = fixpoint(double, (state, n), n, "hierarchy closure")[0]
     return state.select(
         F.col("v").alias("p_partkey"),
         F.col("d").alias("depth"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 
 _KS = [("p50", 0.5), ("p90", 0.9), ("p99", 0.99)]
 _NBUCKETS = 1024
@@ -56,22 +57,23 @@ def kth_statistic_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint-local probe passes, and a bucket-sized sort for any
     number of ks at once — this is how exact percentiles are computed
     at 100 TB when approx_percentile's error bound isn't acceptable.
-    The source is eagerly checkpointed: min/max/count, the histogram
-    and every per-k probe re-read it, which without materialization is
-    2 + len(ks) full scans (review finding — the round-3 fan-out
-    lesson applies to ACTION fan-out, not just plan fan-out).
+    The source is eagerly checkpointed, with min/max/count as signals of
+    that job; the histogram and every per-k probe re-read it, which
+    without materialization is 2 + len(ks) full scans (review finding —
+    the round-3 fan-out lesson applies to ACTION fan-out, not just plan
+    fan-out).
 
     All arithmetic is integer (cents, floor-div bucket ids);
     ceil(q*n) is one double product both engines round identically.
     """
-    x = (
-        load_table(spark, sf_dir, "orders")
-        .select(F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .localCheckpoint(eager=True)
+    x, sig = materialize(
+        load_table(spark, sf_dir, "orders").select(
+            F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents")
+        ),
+        lo=F.min("cents"),
+        hi=F.max("cents"),
     )
-    lo, hi, n = x.agg(
-        F.min("cents"), F.max("cents"), F.count(F.lit(1))
-    ).first()
+    lo, hi, n = sig["lo"], sig["hi"], sig["rows"]
     width = max(1, (hi - lo) // _NBUCKETS + 1)
     hist = {
         r["b"]: r["cnt"]

@@ -24,6 +24,7 @@ from ..functions.vectors import cosine, lit_double_array, lit_long_array, sq_nor
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 
 _N_QUERIES = 20  # vec_id < 20 are the kNN probe set
 _TOP_K = 5
@@ -802,12 +803,10 @@ def knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     each computed ONCE (checkpointed) and re-probed per nprobe — not
     rebuilt per point (round-3 review finding)."""
     e = load_table(spark, sf_dir, "embeddings")
-    exact = (
-        knn_exact_cosine(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+    exact, exact_sig = materialize(
+        knn_exact_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     )
-    n_exact = exact.count()
+    n_exact = exact_sig["rows"]
     assigned = _ivf_assigned(e).localCheckpoint(eager=True)
     n_cells = assigned.select("cell").distinct().count()
     rows = []

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 
 # 2**58: the hash's low 58 bits feed the leading-zero rank.
 _LOW58 = 1 << 58
@@ -1126,12 +1127,10 @@ def sketch_hll_precision_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side would keep a duplicate hash row the oracle dedups and the
     # n_exact/err_ppm columns would diverge. Both engines now sketch the
     # identical distinct-hash stream.
-    h = (
-        o.select(F.xxhash64("o_custkey").alias("hs"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )  # three register aggregates + the exact count consume it
-    n_exact = h.count()
+    h, h_sig = materialize(  # three register aggregates consume it
+        o.select(F.xxhash64("o_custkey").alias("hs")).distinct()
+    )
+    n_exact = h_sig["rows"]
     out = None
     for p in _HLLP_PS:
         bits = 64 - p

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 
 _EPOCH = "1970-01-01"
 
@@ -2306,7 +2307,7 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    daily = (
+    daily, sig = materialize(  # median + signs consume it
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("d"))
         .agg(
@@ -2314,9 +2315,8 @@ def stat_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("x")
         )
-        .localCheckpoint(eager=True)  # median + signs consume it
     )
-    n_days = daily.count()
+    n_days = sig["rows"]
     med = (
         daily.orderBy("x")
         .limit((n_days - 1) // 2 + 1)

@@ -17,6 +17,7 @@ from ..functions.phonetic_sql import SOUNDEX_MACROS
 from ..functions.xxh64_sql import XXH64_MACROS
 from ..io import load_table
 from ..registry import query
+from ..session import materialize
 
 
 def _occurrences(text: Column, needle: str) -> Column:
@@ -1726,15 +1727,14 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # feeds train aggs + test side
     )
     tr = big.filter("is_train")
-    vocab = (
+    vocab, vocab_sig = materialize(  # two membership joins consume it
         tr.select(F.col("w1").alias("w"))
         .unionAll(tr.select(F.col("w2").alias("w")))
         .distinct()
-        .localCheckpoint(eager=True)  # two membership joins + the count
     )
     c12 = tr.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = tr.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    v_val = vocab.count() + 1
+    v_val = vocab_sig["rows"] + 1
     te = (
         big.filter(~F.col("is_train"))
         .join(
@@ -1789,10 +1789,10 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast hint is the right plan — but a trillion-token corpus can still
 # carry tens of millions of frequent types, and a FORCED hint there would
 # collect the vocab on the driver and OOM. Gate the hint on a MEASURED row
-# count (the caller holds the vocab localCheckpointed, so the count reads
-# cached partition metadata); above the cap the join runs hint-free and
-# AQE picks the exchange. ~24 B/row (token + count) -> 2M rows ≈ 48 MB,
-# far under Spark's broadcast ceiling.
+# count (a signal of the vocab's own checkpoint job, session.materialize);
+# above the cap the join runs hint-free and AQE picks the exchange.
+# ~24 B/row (token + count) -> 2M rows ≈ 48 MB, far under Spark's
+# broadcast ceiling.
 import os as _os
 
 _VOCAB_BCAST_CAP = int(
@@ -1880,13 +1880,12 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_ids the old countDistinct(doc_id) and this row count would
     # diverge.
     n_docs = d.filter(F.trim("text") != "").count()
-    df_t = (
+    df_t, df_t_sig = materialize(  # one materialization feeds 3 joins
         tok.groupBy("t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .filter(F.col("c") >= _PMI_MIN_DF)
-        .localCheckpoint(eager=True)  # one materialization feeds 3 joins
     )
-    n_vocab = df_t.count()  # cached metadata read post-checkpoint
+    n_vocab = df_t_sig["rows"]
     keep = (
         tok.join(_maybe_broadcast_vocab(df_t.select("t"), n_vocab), "t")
         .select("doc_id", "t")

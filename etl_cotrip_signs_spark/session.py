@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession, functions as F
 
 # Runtime confs every query in this engine relies on. Applied defensively to
 # any session we are handed, because each is semantically load-bearing:
@@ -138,3 +138,37 @@ def staged_intermediate(spark, build, tag: str, sf_dir: str):
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
         build().write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def materialize(df, **signals):
+    """Eagerly ``localCheckpoint`` ``df`` and return ``(frame, values)``.
+    ``values`` holds the frame's row count under ``"rows"`` and, for each
+    keyword of ``signals`` (an aggregate ``Column``), its value over ``df``.
+
+    The values ride the checkpoint's own job through ``DataFrame.observe``;
+    a separate ``count()`` on the checkpointed frame would launch two more
+    jobs, the fixed per-round cost of an iterative loop.
+
+    Failure model: checkpointed blocks live on the executor that computed
+    them and are not replicated, and the lineage above them is cut. Losing
+    an executor after this call fails every later job that reads the frame,
+    so a loss mid-loop fails the query; nothing is recomputed. Durable
+    intermediates go through :func:`staged_intermediate` (parquet)."""
+    obs = Observation()
+    metrics = [c.alias(k) for k, c in signals.items()]
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
+    return df.localCheckpoint(eager=True), obs.get
+
+
+class NoFixpoint(RuntimeError):
+    """An iterative operator did not converge within its round bound."""
+
+
+def fixpoint(step, state, max_rounds: int, what: str):
+    """Run ``state, done = step(state)`` until ``done``; return that state.
+    Raises :class:`NoFixpoint` if ``max_rounds`` calls leave it unfinished."""
+    for _ in range(max_rounds):
+        state, done = step(state)
+        if done:
+            return state
+    raise NoFixpoint(f"{what} did not converge in {max_rounds} rounds")

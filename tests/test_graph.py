@@ -40,6 +40,28 @@ def test_max_iter_raises_before_convergence(spark):
         _cc(spark, [1, 2, 3, 4, 5], [(1, 2), (2, 3), (3, 4), (4, 5)], max_iter=1)
 
 
+def test_endpoint_missing_from_nodes_raises(spark):
+    # Node 3 is an edge endpoint but not a node: a named error, not a
+    # component member silently added to the output.
+    with pytest.raises(ValueError, match="missing from nodes"):
+        _cc(spark, [1, 2], [(1, 2), (2, 3)])
+
+
+def test_fixpoint_raises_when_step_never_finishes():
+    from etl_cotrip_signs_spark.session import NoFixpoint, fixpoint
+
+    seen = []
+
+    def step(n):
+        seen.append(n)
+        return n + 1, False
+
+    with pytest.raises(NoFixpoint, match="counter did not converge in 5 rounds"):
+        fixpoint(step, 0, 5, "counter")
+    assert seen == [0, 1, 2, 3, 4]
+    assert fixpoint(lambda n: (n + 1, n + 1 == 3), 0, 5, "counter") == 3
+
+
 def test_empty_edges_all_singletons(spark):
     ndf = spark.createDataFrame([(n,) for n in (3, 1, 2)], "node bigint")
     edf = spark.createDataFrame([], "src bigint, dst bigint")

@@ -68,3 +68,58 @@ def test_eager_checkpoint_single_materialization(spark):
     assert acc.value == n, (
         f"expected single materialization ({n} ticks), got {acc.value}"
     )
+
+
+def test_materialize_signals_ride_the_checkpoint_job(spark):
+    """`materialize` returns its signal values and launches exactly as many
+    jobs as a bare eager localCheckpoint of the same frame. The call runs in
+    a daemon thread joined with a timeout: `Observation.get` blocks until
+    the observation is filled, so a Spark that stops filling it on
+    checkpoint fails this test instead of hanging the suite."""
+    import threading
+    import uuid
+
+    from etl_cotrip_signs_spark.session import materialize
+
+    sc = spark.sparkContext
+    df = (
+        spark.range(100)
+        .repartition(4)
+        .groupBy((F.col("id") % 7).alias("g"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+    def jobs_of(fn):
+        group = f"materialize-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run():
+        _, bare = jobs_of(lambda: df.localCheckpoint(eager=True))
+        (frame, sig), observed = jobs_of(
+            lambda: materialize(df, n=F.count(F.lit(1)), total=F.sum("c"))
+        )
+        return bare, observed, sig, frame.count()
+
+    box = {}
+
+    def target():
+        try:
+            box["result"] = run()
+        except Exception as e:  # re-raised in the test thread
+            box["error"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout=180)
+    assert not t.is_alive(), "materialize did not return: observation never filled"
+    if "error" in box:
+        raise box["error"]
+    bare, observed, sig, n_rows = box["result"]
+    assert sig == {"rows": 7, "n": 7, "total": 100}
+    assert n_rows == 7
+    assert bare >= 1 and observed == bare, (bare, observed)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F, types as T
 
 from etl_cotrip_signs_spark.functions.skew import salted_agg
@@ -103,6 +104,22 @@ def test_hierarchy_doubling_survives_one_based_keys(spark, tmp_path):
         ).fetchall()
     }
     assert got == want and len(got) == 7
+
+
+def test_hierarchy_doubling_stall_is_a_named_error(spark, tmp_path):
+    """Keys whose parents are absent (5 -> 2, 6 -> 3) never resolve: the
+    progress guard raises its ValueError instead of looping."""
+    from etl_cotrip_signs_spark import registry
+
+    registry.load_all()
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(k, f"p{k}", "B", "T", k, float(k)) for k in (5, 6)],
+        "p_partkey long, p_name string, p_brand string, p_type string,"
+        " p_size int, p_retailprice double",
+    ).coalesce(1).write.parquet(f"{d}/part.parquet")
+    with pytest.raises(ValueError, match="hierarchy closure stalled: 2 nodes"):
+        registry.QUERIES["hierarchy_closure_doubling"](spark, d)
 
 
 def test_cusum_drift_counts_first_event(spark, tmp_path):

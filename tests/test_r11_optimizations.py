@@ -55,6 +55,22 @@ def test_literal_array_helpers_round_trip_exactly(spark):
         assert struct.pack("<d", got) == struct.pack("<d", want)
 
 
+@pytest.mark.parametrize(
+    "vals", [[], [1.0, float("nan")], [float("inf")], [2.0, float("-inf")]]
+)
+def test_literal_array_helpers_reject_empty_and_non_finite(spark, vals):
+    """Empty input and NaN/±inf are named errors, not an untyped `array()`
+    or a `nanD` column reference."""
+    from etl_cotrip_signs_spark.functions.vectors import (
+        lit_double_array,
+        lit_long_array,
+    )
+
+    for helper in (lit_double_array, lit_long_array):
+        with pytest.raises(ValueError, match="literal array"):
+            helper(vals)
+
+
 def _join_blocks(plan: str, key_marker: str) -> list[str]:
     return [
         b
